@@ -390,7 +390,7 @@ def multimodal_bmp_200k(spark, sf_dir):
         queries = extract_features(
             media.where(F.col("media_id") < 100), fake=False
         ).select(F.col("media_id").alias("query_id"), F.col("feature").alias("qvec"))
-        return knn_join(corpus, queries, k=10, metric="cosine", algorithm="grid", dim=16)
+        return knn_join(corpus, queries, k=10, metric="cosine", algorithm="grid")
 
     return run
 
@@ -1705,16 +1705,16 @@ def main():
     except AttributeError:
         pass
 
-    # warm the JVM + parquet footers + the shared kernel/window/grid
-    # codegen paths so per-query numbers measure the plans, not
-    # first-touch costs (rep1-vs-rep2 deltas of 1.5-2x otherwise land
-    # on whichever entries run first)
+    # warm the JVM + parquet footers + the shared partial/grid kernels
+    # and merge-window codegen so per-query numbers measure the plans,
+    # not first-touch costs (rep1-vs-rep2 deltas of 1.5-2x otherwise
+    # land on whichever entries run first)
     spark.range(1).count()
     from vicinity_spark.operators.knn import knn_join as _warm_knn
 
     _warm_q = Q._emb_queries(spark, sf_dir)
     _warm_knn(Q._emb_corpus(spark, sf_dir), _warm_q, k=5, metric="cosine", algorithm="grid").count()
-    _warm_knn(Q._emb_corpus(spark, sf_dir), _warm_q, k=5, metric="cosine", algorithm="window").count()
+    _warm_knn(Q._emb_corpus(spark, sf_dir), _warm_q, k=5, metric="cosine").count()
 
     import gc
 

@@ -1,19 +1,22 @@
-"""Local replica of the driver's correctness gate: run every declared
-query on Spark and its oracle on DuckDB at sf0.01, compare row count,
-schema (column names), and an order-insensitive value hash.
+"""Run every declared query on Spark and its oracle on DuckDB, and
+compare schema (column names), row count and an order-insensitive
+value hash. tests/test_oracles.py runs the same comparison at sf0.001.
 
 Usage: python scripts/check_correctness.py [sf_dir] [query ...]
+(sf_dir defaults to the sf0.01 tables in ../testdata beside the repo)
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -43,31 +46,73 @@ def value_hash(rows, colnames) -> str:
     return h.hexdigest()
 
 
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per testdata table."""
+    con = duckdb.connect()
+    # DuckDB shares the process (and the host) with the Spark JVM and
+    # its Arrow python workers. Its default memory limit is 80% of RAM,
+    # so under host pressure its allocator failed on oracles that pass
+    # in isolation ("Failed to allocate block of 4096 bytes"). Bound
+    # the limit below the contended zone and give it a spill directory
+    # so heavy oracles degrade to disk instead of failing.
+    con.execute("SET memory_limit='12GB'")
+    con.execute("SET temp_directory='/tmp/duckdb_spill'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def run_oracle(con, sql: str):
+    """(column names, rows) of an oracle query. Retries once: the only
+    DuckDB failures seen here are transient allocator OOMs."""
+    try:
+        cur = con.execute(sql)
+    except Exception as e:
+        time.sleep(2)
+        try:
+            cur = con.execute(sql)
+        except Exception as e2:
+            # report both attempts: a retry that dies differently (a
+            # binder error after an OOM) must not hide the first error
+            first, second = f"{type(e).__name__}: {e}", f"{type(e2).__name__}: {e2}"
+            raise RuntimeError(
+                first + (f" | retry: {second}" if second != first else " (retry: same)")
+            ) from e2
+    return [d[0] for d in cur.description], cur.fetchall()
+
+
+def compare(scols, srows, ocols, orows) -> "list[str]":
+    """Problems of a Spark result against its oracle; empty when they
+    match. A hash mismatch lists up to three rows found on one side
+    only."""
+    problems = []
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"schema {sorted(scols)} != {sorted(ocols)}")
+    if len(srows) != len(orows):
+        problems.append(f"rowcount {len(srows)} != {len(orows)}")
+    if not problems and value_hash(srows, scols) != value_hash(orows, ocols):
+        sset = {tuple(canon(v) for v in r) for r in srows}
+        oset = {tuple(canon(v) for v in r) for r in orows}
+        problems.append(
+            "value-hash mismatch"
+            + "".join(f"\n        spark-only: {x}" for x in list(sset - oset)[:3])
+            + "".join(f"\n        duck-only:  {x}" for x in list(oset - sset)[:3])
+        )
+    return problems
+
+
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = (
+        sys.argv[1] if len(sys.argv) > 1
+        else os.path.join(os.path.dirname(REPO), "testdata", "sf0.01")
+    )
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
     from vicinity_spark.session import get_spark
 
     spark = get_spark("correctness-check")
-    con = duckdb.connect()
-    # co-residency hardening (r11): DuckDB shares the process (and the
-    # host) with a 24g Spark JVM + its Arrow python workers. DuckDB's
-    # default memory limit is 80% of RAM, so under transient host
-    # pressure its allocator hits raw malloc failures ("Failed to
-    # allocate block of 4096 bytes") on oracles that pass in isolation
-    # — the source of rare spurious duckdb-error FAILs (observed twice,
-    # 6 rows one run / 1 row another, all OOM, all green isolated).
-    # Bound the limit well below the contended zone and give it a spill
-    # directory so heavy oracles degrade to disk instead of failing.
-    con.execute("SET memory_limit='12GB'")
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
+    con = connect(sf_dir)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
@@ -77,7 +122,7 @@ def main():
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
+            srows = [tuple(r) for r in sdf.collect()]
             scols = sdf.columns
         except Exception as e:
             failures.append(name)
@@ -87,48 +132,12 @@ def main():
             print(f"rows  {name}: {len(srows)} rows (no oracle — rows-only)")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
-        except Exception as e:
-            # one retry: the only duckdb failures ever observed here are
-            # transient allocator OOMs under host memory pressure
-            try:
-                time.sleep(2)
-                cur = con.execute(oracles[name])
-                ocols = [d[0] for d in cur.description]
-                orows = cur.fetchall()
-            except Exception as e2:
-                failures.append(name)
-                # report BOTH attempts — a retry that dies differently
-                # (e.g. a real binder error surfacing after an OOM)
-                # must not be masked by the first exception
-                print(
-                    f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}"
-                    + (
-                        f" | retry: {type(e2).__name__}: {e2}"
-                        if f"{type(e2).__name__}: {e2}" != f"{type(e).__name__}: {e}"
-                        else " (retry: same)"
-                    )
-                )
-                continue
-        problems = []
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"schema {sorted(scols)} != {sorted(ocols)}")
-        if len(srows) != len(orows):
-            problems.append(f"rowcount {len(srows)} != {len(orows)}")
-        if not problems:
-            sh = value_hash([tuple(r) for r in srows], scols)
-            oh = value_hash(orows, ocols)
-            if sh != oh:
-                problems.append("value-hash mismatch")
-                # show a sample diff
-                sset = {tuple(canon(v) for v in r) for r in srows}
-                oset = {tuple(canon(v) for v in r) for r in orows}
-                for x in list(sset - oset)[:3]:
-                    print(f"        spark-only: {x}")
-                for x in list(oset - sset)[:3]:
-                    print(f"        duck-only:  {x}")
+            ocols, orows = run_oracle(con, oracles[name])
+        except RuntimeError as e:
+            failures.append(name)
+            print(f"FAIL  {name}: duckdb error: {e}")
+            continue
+        problems = compare(scols, srows, ocols, orows)
         dt = time.time() - t0
         if problems:
             failures.append(name)

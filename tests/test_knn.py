@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 from vicinity_spark.operators.knn import knn_join, threshold_join
 
 
-@pytest.mark.parametrize("algorithm", ["window", "partial", "grid"])
+@pytest.mark.parametrize("algorithm", ["partial", "grid"])
 @pytest.mark.parametrize("metric", ["cosine", "euclidean"])
 def test_knn_matches_numpy_oracle(corpus_df, queries_df, np_oracle, metric, algorithm):
     k = 10
@@ -34,7 +34,7 @@ def test_knn_k_below_one_raises(corpus_df, queries_df):
         knn_join(corpus_df, queries_df, k=0)
 
 
-@pytest.mark.parametrize("algorithm", ["window", "partial", "grid"])
+@pytest.mark.parametrize("algorithm", ["partial", "grid"])
 def test_knn_duplicate_queries_identical(corpus_df, queries_df, algorithm):
     # determinism: duplicated query rows give identical results
     # (reference tests/test_vicinity.py:58-64)
@@ -312,7 +312,7 @@ def test_ivfpqr_refinement_code_rerank(spark, tmp_path):
     built.count()
     assert "__rcode" in built.columns
     got = strat.knn(built, queries, k=5, metric=Metric.COSINE).collect()
-    exact = knn_join(corpus, queries, k=5, metric="cosine", algorithm="window").collect()
+    exact = knn_join(corpus, queries, k=5, metric="cosine").collect()
     es = {(r["query_id"], r["id"]) for r in exact}
     gs = {(r["query_id"], r["id"]) for r in got}
     assert len(gs & es) / len(es) >= 0.8
@@ -457,7 +457,7 @@ def test_knn_empty_query_table_all_algorithms(spark):
         "id long, vector array<float>",
     )
     empty_q = spark.createDataFrame([], "query_id long, qvec array<float>")
-    for algo in ("auto", "window", "partial", "grid"):
+    for algo in ("auto", "partial", "grid"):
         res = knn_join(corpus, empty_q, k=3, algorithm=algo)
         assert res.count() == 0, algo
         assert res.columns == ["query_id", "id", "distance", "rank"], algo
@@ -589,7 +589,7 @@ def test_ivf_preset_centroids_build_assigns_argmin(spark):
     res = strat.knn(built, queries, k=5, metric=Metric.COSINE)
     from vicinity_spark.operators.knn import knn_join
 
-    exact = knn_join(corpus, queries, k=5, metric="cosine", algorithm="window", dim=8)
+    exact = knn_join(corpus, queries, k=5, metric="cosine")
     a = {(r.query_id, r.rank): r.id for r in res.collect()}
     b = {(r.query_id, r.rank): r.id for r in exact.collect()}
     assert a == b
@@ -695,39 +695,68 @@ def test_threshold_join_rejects_unknown_algorithm(spark, corpus_df, queries_df):
         threshold_join(corpus_df, queries_df, 0.4, "cosine", algorithm="nope")
 
 
+def test_knn_join_rejects_unknown_algorithm(corpus_df, queries_df):
+    # the join + window plan is gone; its name is not an alias of another
+    with pytest.raises(ValueError, match="unknown algorithm 'window'"):
+        knn_join(corpus_df, queries_df, k=5, algorithm="window")
+
+
 def test_topk_deterministic_under_duplicate_vectors_and_layouts(spark):
-    """r6 hardening: exact-distance ties (duplicate vectors) used to be
-    cut by argpartition's arbitrary order inside the partial/grid
-    kernels, making the emitted top-k depend on partition layout. Now
-    every boundary is a (distance, id) cut: with 30 of 60 rows sharing
-    one vector and k landing inside the tie set, every algorithm and
-    every partitioning must return the identical, id-ordered winners."""
+    """Exact-distance ties must be cut by (distance, id) inside the
+    partial/grid kernels, at every partition layout:
+
+    - duplicate vectors: 30 of 60 rows share one vector and k lands
+      inside the tie set;
+    - distinct vectors at one true distance: the query is 0.5 on dims
+      0-5, and rows 0-5 (0.5 on dims 0-5 plus three more) and rows 6-11
+      (0.5 on four of dims 0-5) all sit at cosine distance 1 - sqrt(2/3).
+      The normalised-matmul kernel can score rows 0-5 an ulp farther,
+      and a cut on its values then keeps rows 6-9 instead of rows 0-3."""
+    import itertools
+
     import numpy as np
 
     rng = np.random.default_rng(5)
     base = rng.random(8)
-    rows = []
-    for i in range(60):
-        v = base if i % 2 == 0 else rng.random(8)  # 30 exact duplicates
-        rows.append((i, [float(x) for x in v]))
-    q = spark.createDataFrame(
-        [(0, [float(x) for x in base])], "query_id long, qvec array<float>"
-    )
-    expected = None
-    for parts in (1, 7, 32):
-        corpus = spark.createDataFrame(rows, "id long, vector array<float>").repartition(parts)
-        for algo in ("window", "partial", "grid"):
-            got = [
-                (r["rank"], r["id"])
-                for r in knn_join(corpus, q, k=5, metric="cosine", algorithm=algo)
-                .orderBy("rank")
-                .collect()
-            ]
-            # distance-0 ties must resolve to the 5 smallest duplicate ids
-            assert got == [(1, 0), (2, 2), (3, 4), (4, 6), (5, 8)], (algo, parts)
-            if expected is None:
-                expected = got
-            assert got == expected, (algo, parts)
+    dup_rows = [(i, base if i % 2 == 0 else rng.random(8)) for i in range(60)]
+
+    q = np.zeros(16)
+    q[:6] = 0.5
+    tie_rows = []
+    for extra in list(itertools.combinations(range(6, 16), 3))[:6]:
+        v = q.copy()
+        v[list(extra)] = 0.5
+        tie_rows.append(v)
+    for four in list(itertools.combinations(range(6), 4))[:6]:
+        v = np.zeros(16)
+        v[list(four)] = 0.5
+        tie_rows.append(v)
+    tie_rows.append(q)  # id 12, distance 0
+    for j in range(6, 16):  # ids 13-22, orthogonal to the query
+        v = np.zeros(16)
+        v[j] = 0.5
+        tie_rows.append(v)
+
+    cases = [
+        # distance-0 duplicates resolve to the 5 smallest duplicate ids
+        (dup_rows, base, [(1, 0), (2, 2), (3, 4), (4, 6), (5, 8)]),
+        (list(enumerate(tie_rows)), q, [(1, 12), (2, 0), (3, 1), (4, 2), (5, 3)]),
+    ]
+    for rows, qvec, want in cases:
+        qdf = spark.createDataFrame(
+            [(0, [float(x) for x in qvec])], "query_id long, qvec array<float>"
+        )
+        data = [(i, [float(x) for x in v]) for i, v in rows]
+        for parts in (1, 7, 32):
+            corpus = spark.createDataFrame(data, "id long, vector array<float>").repartition(parts)
+            for algo in ("partial", "grid"):
+                got = [
+                    (r["rank"], r["id"])
+                    for r in knn_join(corpus, qdf, k=5, metric="cosine", algorithm=algo)
+                    .orderBy("rank")
+                    .collect()
+                ]
+                assert got == want, (algo, parts)
 
 
 def test_pq_pool_deterministic_under_duplicate_codes(spark):
@@ -920,7 +949,7 @@ def test_nonfinite_corpus_vectors_rank_last_all_algorithms(spark):
         "id long, vector array<double>",
     )
     q = spark.createDataFrame([(100, [1.0, 0.0])], "query_id long, qvec array<double>")
-    for alg in ("window", "partial", "grid"):
+    for alg in ("partial", "grid"):
         rows = knn_join(emb, q, k=4, metric="cosine", algorithm=alg).collect()
         ids = [r.id for r in sorted(rows, key=lambda r: r.rank)]
         assert ids[:2] == [0, 3], (alg, ids)
@@ -1088,17 +1117,17 @@ def test_det_topk_idx_matches_exact_cut():
             )
 
 
-def test_merge_parts_cut_ignores_chunk_shape_ulp_noise():
-    """r15 (r14 ADVICE): the merge cut must run on per-pair RESCORED
-    values, not the per-chunk BLAS values — exact duplicates split
-    across chunks of different shapes can carry ulp-different chunk
-    values, and a cap boundary inside the tie set then keeps the wrong
-    duplicate ids. Simulates the shape-dependent BLAS noise directly
-    so the pin holds on every host."""
+def test_merge_parts_cut_ignores_chunk_shape_ulp_noise(monkeypatch):
+    """The merge cut must run on per-pair values, not on the per-chunk
+    matrix-kernel values: exact duplicates split across chunks can
+    carry ulp-different chunk values, and a cap boundary inside the tie
+    set then keeps the wrong duplicate ids. Simulates shape-dependent
+    BLAS noise directly (the first chunk scores an ulp high) so the pin
+    holds on every host."""
     import numpy as np
 
     from vicinity_spark.datatypes import Metric
-    from vicinity_spark.operators.grid import _merge_parts
+    from vicinity_spark.operators import grid, knn
 
     dim = 4
     base = np.ones(dim)
@@ -1107,15 +1136,18 @@ def test_merge_parts_cut_ignores_chunk_shape_ulp_noise():
     ids = np.arange(8, dtype=np.int64)
     qids = np.array([42], dtype=np.int64)
     Q = base[None, :]
-    ulp = 1.1102230246251565e-16
-    # simulated per-chunk kernel output: chunk A (positions 0, 1)
-    # scored its duplicates an ulp high, chunk B (positions 2, 3)
-    # exactly 0 — the true distance of every duplicate pair
-    parts_d = [np.array([[ulp, ulp]]), np.array([[0.0, 0.0]])]
-    parts_i = [np.array([[0, 1]]), np.array([[2, 3]])]
-    out = _merge_parts(
-        qids, ids, parts_d, parts_i, 3, rescore=(Q, X, Metric.L2_SQUARED)
-    )
+    real = knn._np_distances
+    calls = []
+
+    def noisy(metric, Q, X):
+        calls.append(len(X))
+        D = real(metric, Q, X)
+        return D + 1.1102230246251565e-16 if len(calls) == 1 else D
+
+    monkeypatch.setattr(knn, "_np_distances", noisy)
+    monkeypatch.setattr(grid, "_CCHUNK", 2)  # chunks: positions 0-1, 2-3, ...
+    out = grid.dense_cell_topk(qids, ids, X, Q, Metric.L2_SQUARED, 3)
+    assert calls == [2, 2, 2, 2]
     # (distance, id) over TRUE values: the three smallest duplicate ids
     assert sorted(out["id"].tolist()) == [0, 1, 2]
     assert all(d == 0.0 for d in out["distance"].tolist())

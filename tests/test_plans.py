@@ -4,23 +4,23 @@ viable at 100 TB must hold in the physical plan, not just in intent."""
 import pytest
 from pyspark.sql import functions as F
 
-from vicinity_spark.plans import (
-    assert_no_cartesian,
-    explain_str,
-    has_broadcast_join,
-    pushed_filters,
-    read_schema_cols,
-)
+from vicinity_spark.plans import explain_str, pushed_filters, read_schema_cols
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_knn_window_broadcasts_queries(spark, corpus_df, queries_df):
-    from vicinity_spark.operators.knn import knn_join
+def test_exact_knn_queries_run_the_arrow_kernels(spark):
+    """The exact k-NN oracle rows (and the knn_cosine bench entry) run
+    knn_join's production plans, whose top-k kernels are mapInPandas
+    stages: the oracle gate checks the kernels users run."""
+    from vicinity_spark.queries import QUERIES, _make_knn
 
-    df = knn_join(corpus_df, queries_df, k=5, metric="cosine", algorithm="window")
-    assert has_broadcast_join(df)  # queries side must broadcast
-    assert_no_cartesian(df)
+    for name, fn in (
+        ("knn_cosine", _make_knn("cosine")),
+        ("knn_all_metrics", QUERIES["knn_all_metrics"]),
+        ("multimodal_knn", QUERIES["multimodal_knn"]),
+    ):
+        assert "MapInPandas" in explain_str(fn(spark, SF_DIR), "simple"), name
 
 
 def test_parquet_filter_pushdown_and_pruning(spark):

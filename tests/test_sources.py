@@ -123,7 +123,7 @@ def test_formats_feed_operators_identically(spark, tmp_path, docs, embs):
         write_embeddings(embs, p, fmt)
         e = read_embeddings(spark, p, fmt)
         q = e.select(F.col("id").alias("query_id"), F.col("vector").alias("qvec"))
-        r = knn_join(e, q, k=2, metric="cosine", algorithm="window")
+        r = knn_join(e, q, k=2, metric="cosine")
         knns.append({(x.query_id, x.id, round(x.distance, 6)) for x in r.collect()})
     assert knns[0] == knns[1] == knns[2]
 

@@ -138,6 +138,43 @@ def test_delete_struct_item(spark, data):
     assert len(store) == N - 1
 
 
+def _dataframe_store(spark, data, n=50):
+    """A from_dataframe store whose payload column is not item_json."""
+    vectors, _, _ = data
+    df = spark.createDataFrame(
+        [(i, f"t{i}", [float(x) for x in vectors[i]]) for i in range(n)],
+        "id long, tag string, vector array<float>",
+    )
+    return VectorStore.from_dataframe(df)
+
+
+def test_from_dataframe_query_returns_payload_items(spark, data):
+    vectors, _, _ = data
+    store = _dataframe_store(spark, data)
+    res = store.query(vectors[3], k=2)
+    assert res[0][0][0] == {"tag": "t3"}  # its own vector ranks first
+    hits = store.query_threshold(vectors[3], threshold=1e-6)
+    assert [it for it, _ in hits[0]] == [{"tag": "t3"}]
+    store.insert(["new"], vectors[3])
+    assert sorted(map(str, (it for it, _ in store.query(vectors[3], k=2)[0]))) == [
+        "new", str({"tag": "t3"})
+    ]
+
+
+def test_from_dataframe_delete(spark, data):
+    vectors, _, _ = data
+    store = _dataframe_store(spark, data)
+    # source rows carry no item: a delete before any insert finds none
+    with pytest.raises(ValueError, match="were not in the store"):
+        store.delete(["t1"])
+    store.insert(["a", "b"], vectors[:2])
+    store.delete(["a"])
+    # the source rows' NULL item must not drop them
+    assert len(store) == store.df.count() == 51
+    with pytest.raises(ValueError, match="were not in the store"):
+        store.delete(["a"])
+
+
 def test_get_vector_by_index(spark, data):
     vectors, _, _ = data
     store = make_store(spark, data, "basic")

@@ -16,6 +16,10 @@ from vicinity_spark.operators.knn import knn_join, threshold_join
 
 
 class ExactStrategy(IndexStrategy):
+    """Serves top-k through ``knn_join`` and radius search through
+    ``threshold_join``, both with ``algorithm="auto"``: the plan is
+    chosen from the size of the query table, never from a parameter."""
+
     backend = Backend.BASIC
     exact = True
 
@@ -28,15 +32,7 @@ class ExactStrategy(IndexStrategy):
         *,
         payload_cols: Optional[Sequence[str]] = None,
     ) -> DataFrame:
-        return knn_join(
-            corpus,
-            queries,
-            k=k,
-            metric=metric,
-            payload_cols=payload_cols,
-            algorithm=self.params.get("algorithm", "auto"),
-            dim=self.params.get("dim"),
-        )
+        return knn_join(corpus, queries, k=k, metric=metric, payload_cols=payload_cols)
 
     def threshold(
         self,
@@ -47,12 +43,6 @@ class ExactStrategy(IndexStrategy):
         *,
         payload_cols: Optional[Sequence[str]] = None,
     ) -> DataFrame:
-        # params["algorithm"] names a KNN plan (window/partial/grid/auto);
-        # only "grid" has a threshold twin — map everything else to the
-        # auto router so an unbounded query table is never force-broadcast
-        algo = self.params.get("threshold_algorithm") or (
-            "grid" if self.params.get("algorithm") == "grid" else "auto"
-        )
         return threshold_join(
             corpus,
             queries,
@@ -60,5 +50,4 @@ class ExactStrategy(IndexStrategy):
             metric=metric,
             payload_cols=payload_cols,
             dim=self.params.get("dim"),
-            algorithm=algo,
         )

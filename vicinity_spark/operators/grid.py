@@ -46,8 +46,7 @@ def nearest_centroids(Q: np.ndarray, C: np.ndarray, n: int = 1, Csq=None):
 
     The distance matrix comes from the expansion
     ‖q‖² + ‖c‖² − 2·q·cᵀ — ONE matmul producing nq×k doubles. The
-    broadcasting form ((Q[:,None,:]−C[None,:,:])²).sum(2) every
-    centroid-argmin kernel in this engine used before r13
+    broadcasting form ((Q[:,None,:]−C[None,:,:])²).sum(2)
     materializes nq×k×dim doubles instead: ~670 MB per 4096-row Arrow
     batch at k=320/dim=64 (measured: a 1M-row SemDeDup assignment ran
     29× its constant-density scaling target), and at the SemDeDup
@@ -74,8 +73,7 @@ def nearest_centroids(Q: np.ndarray, C: np.ndarray, n: int = 1, Csq=None):
     # "(n+1)th smallest <= kth+tol", and argpartition pins exactly
     # those two order statistics — so tie DETECTION costs one column
     # compare instead of an nq×k boolean matrix and a full argsort
-    # (the constant the r13 kernel swap had added to the ivfsq probe
-    # path, ~1.25× on ann_ivfsq_batch)
+    # (~1.25× on ann_ivfsq_batch)
     if n == 1:
         sel = np.argmin(D, axis=1)[:, None]
         kth = np.take_along_axis(D, sel, axis=1)[:, 0]
@@ -164,8 +162,8 @@ def corpus_blocks(
     per-query merge handles kk × n_blocks candidates. So the default
     sizes blocks by payload DENSITY — ceil(count/target_rows), one
     distributed count (the twin of query_blocks' own count) — which
-    folds a small corpus into few blocks (the r12 fixed-32 default
-    regressed pq/sq ~2× on a 2k-row corpus) while a huge corpus still
+    folds a small corpus into few blocks (a fixed 32 blocks ran pq/sq
+    ~2× slower on a 2k-row corpus) while a huge corpus still
     gets memory-bounded cells whose block count grows with the data,
     not with a static conf. Callers that already know their count or
     payload width pass n_blocks directly, or tune target_rows (pq's
@@ -222,7 +220,7 @@ def cell_arrays(pdf: pd.DataFrame, i: int):
     return ids, payload, qids, Q
 
 
-def det_topk_idx(D: np.ndarray, cap: int) -> np.ndarray:
+def det_topk_idx(D: np.ndarray, cap: int, tol: float = 0.0, exact=None) -> np.ndarray:
     """Per-row index SETS of the top-`cap` entries by (value, index) —
     DETERMINISTIC at equal values, where argpartition's tie order is
     arbitrary (and real: duplicate vectors / quantization codes tie
@@ -232,19 +230,25 @@ def det_topk_idx(D: np.ndarray, cap: int) -> np.ndarray:
     Rows whose boundary is tie-free keep the pure O(n) argpartition
     result; only tie-straddling (or NaN-poisoned) rows pay an exact
     per-row resolution. Column index order must equal id order
-    (cell_arrays sorts by id)."""
+    (cell_arrays sorts by id).
+
+    With ``tol`` > 0 a tie is any value within tol·max(1, |kth|) of the
+    row's k-th value, and ``exact(r, cand)`` (when given) supplies the
+    values that band is cut on — see exact_topk."""
     n, w = D.shape
     cap = min(cap, w)
     if cap == w:
         return np.broadcast_to(np.arange(w, dtype=np.int64), (n, w))
     part = np.argpartition(D, cap - 1, axis=1)[:, :cap]
     kth = np.take_along_axis(D, part, axis=1).max(axis=1)
-    counts = (D <= kth[:, None]).sum(axis=1)
+    band = kth + tol * np.maximum(1.0, np.abs(kth)) if tol else kth
+    counts = (D <= band[:, None]).sum(axis=1)
     out = part.astype(np.int64)
     for r in np.nonzero(counts != cap)[0]:
         if counts[r] > cap:  # boundary ties — resolve by (value, index)
-            cand = np.nonzero(D[r] <= kth[r])[0]  # ascending index order
-            out[r] = cand[np.argsort(D[r, cand], kind="stable")[:cap]]
+            cand = np.nonzero(D[r] <= band[r])[0]  # ascending index order
+            vals = D[r, cand] if exact is None else exact(r, cand)
+            out[r] = cand[np.argsort(vals, kind="stable")[:cap]]
         else:  # NaNs poisoned the kth compare
             out[r] = np.argsort(D[r], kind="stable")[:cap]
     return out
@@ -257,10 +261,9 @@ def rescore_pairs(metric, Q: np.ndarray, X: np.ndarray, ii: np.ndarray,
     (`_np_pairwise` — per-row reductions, so the value depends only on
     the pair, never on batch shape). Processed in query-row blocks so
     the repeated-Q and gathered-X temporaries stay ≤ budget_bytes each
-    (r14 ADVICE: the unchunked form materialized two nq·cap × dim
+    (the unchunked form materialized two nq·cap × dim
     float64 matrices — ~800 MB each at 1k queries × cap 100 × dim
-    1024 — a peak-memory term outside the _CCHUNK discipline, and the
-    prime suspect for the r14 32-worker crashes)."""
+    1024 — a peak-memory term outside the _CCHUNK discipline)."""
     from vicinity_spark.operators.knn import _np_pairwise
 
     Q = np.asarray(Q, dtype=np.float64)
@@ -279,7 +282,32 @@ def rescore_pairs(metric, Q: np.ndarray, X: np.ndarray, ii: np.ndarray,
     return out
 
 
-def _merge_parts(qids, ids, parts_d, parts_i, kk: int, rescore=None) -> pd.DataFrame:
+def exact_topk(metric, Q: np.ndarray, X: np.ndarray, cap: int):
+    """(idx, dist), each nq × min(cap, len(X)): every query's top-`cap`
+    rows of X cut by (per-pair distance, index), and their per-pair
+    distances (`rescore_pairs`). Row order of X must be id order
+    (cell_arrays and the `partial` kernel sort by id), so the cut is the
+    oracles' ORDER BY d, id. Order within a result row is unspecified.
+
+    Selection runs on the matrix kernel (`_np_distances`), whose value
+    for a pair can sit a few ulps off the per-pair value and vary with
+    batch shape. Distinct vectors at the same true distance then come
+    out in noise order, and a cut inside such a group would keep the
+    wrong ids. So a row whose k-th matrix distance has other candidates
+    within 1e-9·max(1, |kth|) re-cuts that band on per-pair distances
+    (a handful of pairs per tied row). The band test is the one pass
+    over D that det_topk_idx makes anyway; rows without near-ties keep
+    the O(n) argpartition set."""
+    from vicinity_spark.operators.knn import _np_distances, _np_pairwise
+
+    def exact(r, cand):
+        return _np_pairwise(metric, np.repeat(Q[r : r + 1], len(cand), axis=0), X[cand])
+
+    idx = det_topk_idx(_np_distances(metric, Q, X), cap, tol=1e-9, exact=exact)
+    return idx, rescore_pairs(metric, Q, X, idx)
+
+
+def _merge_parts(qids, ids, parts_d, parts_i, kk: int) -> pd.DataFrame:
     Dall = np.concatenate(parts_d, axis=1)
     Iall = np.concatenate(parts_i, axis=1)
     cap = min(kk, Dall.shape[1])
@@ -290,28 +318,6 @@ def _merge_parts(qids, ids, parts_d, parts_i, kk: int, rescore=None) -> pd.DataF
     ordI = np.argsort(Iall, axis=1, kind="stable")
     D2 = np.take_along_axis(Dall, ordI, axis=1)
     I2 = np.take_along_axis(Iall, ordI, axis=1)
-    if rescore is not None:
-        # layout-independent distances (r14, re-sited r15): BLAS matrix
-        # kernels are free to pick different micro-kernels for
-        # different batch SHAPES, so the same (query, vector) pair can
-        # score an ulp apart in different partitions/cells/chunks
-        # (observed live on the r14 host: exact duplicates at 0.0 in
-        # one partition and 1.11e-16 in another — the downstream
-        # (distance, id) cut then kept the WRONG duplicate ids).
-        # Re-scoring every surviving per-chunk candidate (≤ kk ×
-        # n_chunks wide) with the per-pair kernel — whose reduction
-        # runs over each row alone, hence shape-independent — makes
-        # the values a function of the pair only. r15 (ADVICE): the
-        # rescore moved BEFORE the merge cut — the r14 form rescored
-        # only the post-cut winners, so duplicates split across
-        # DIFFERENT-SHAPED chunks of one cell could still tie-break on
-        # ulp-different per-chunk values at the cap boundary; cutting
-        # on the rescored matrix closes that hole. Selection inside a
-        # chunk is untouched (one BLAS call scores identical vectors
-        # identically); cost is nq × kk·n_chunks pair scores beside
-        # the nq × n matrix already computed (<1%).
-        Q, X, metric = rescore
-        D2 = rescore_pairs(metric, Q, X, I2)
     sel = det_topk_idx(D2, cap)
     dd = np.take_along_axis(D2, sel, axis=1)
     ii = np.take_along_axis(I2, sel, axis=1)
@@ -343,17 +349,12 @@ def cell_topk(qids, ids, codes, tables, m: int, kk: int) -> pd.DataFrame:
 
 def dense_cell_topk(qids, ids, X: np.ndarray, Q: np.ndarray, metric, kk: int) -> pd.DataFrame:
     """Per-query top-kk of one grid cell over DENSE vectors (the SQ /
-    exact-grid sibling of cell_topk). Emitted distances are re-scored
-    per-pair so they are independent of cell/chunk shape — see the
-    rescore note in _merge_parts (cell_topk's ADC sums are already
-    shape-independent: fixed-m reductions per row)."""
-    from vicinity_spark.operators.knn import _np_distances
-
+    exact-grid sibling of cell_topk). Each chunk is cut by exact_topk,
+    so every candidate the merge sees carries its per-pair distance and
+    the merge cut is a (distance, id) cut whatever the chunk shapes."""
     parts_d, parts_i = [], []
     for s in range(0, len(ids), _CCHUNK):
-        D = _np_distances(metric, Q, X[s : s + _CCHUNK])
-        cap = min(kk, D.shape[1])
-        idx = det_topk_idx(D, cap)  # ties cut by id (see cell_topk)
-        parts_d.append(np.take_along_axis(D, idx, axis=1))
+        idx, d = exact_topk(metric, Q, X[s : s + _CCHUNK], kk)
+        parts_d.append(d)
         parts_i.append(idx + s)
-    return _merge_parts(qids, ids, parts_d, parts_i, kk, rescore=(Q, X, metric))
+    return _merge_parts(qids, ids, parts_d, parts_i, kk)

@@ -9,22 +9,23 @@ Reference semantics mirrored (citations into /root/reference/):
   (vicinity/vicinity.py:140-165, basic.py:149-172; SURVEY.md §2.3
   threshold-semantics note: we standardize on the exact backend's `<=`).
 
-Two physical strategies for top-k:
+Two physical plans for top-k, both vectorized numpy kernels inside
+`mapInPandas` (the distributed analog of the reference's 1024-row
+batched matmul, basic.py:195-204) followed by a merge window over
+their bounded candidate rows:
 
-- ``window``: broadcast(queries) ⋈ corpus → distance column →
-  `row_number() over (partition by query_id order by distance, id)`.
-  Pure Catalyst, bit-deterministic (left-folded double arithmetic, see
-  functions/metrics.py) — this is the oracle-checked path. The window
-  shuffles all q×n candidate rows by query_id, so it is the right plan
-  only when q×n is modest or q is large relative to n.
+- ``partial``: the bounded query batch is collected and broadcast, and
+  every corpus partition emits its own per-query top-k. The shuffle is
+  bounded by q×k×partitions regardless of corpus size: the full cross
+  product is never materialized and never shuffled.
 
-- ``partial``: per-corpus-partition vectorized top-k inside
-  `mapInPandas` (numpy matrix kernel — the distributed analog of the
-  reference's 1024-row batched matmul, basic.py:195-204), then a final
-  merge window over the surviving q×k×num_partitions rows. The shuffle
-  is bounded by q×k×partitions regardless of corpus size — this is the
-  plan that survives a 100 TB corpus: the full cross product is never
-  materialized and never shuffled.
+- ``grid``: corpus blocks × query blocks joined and scored per grid
+  cell (operators/grid.py). The query side arrives through the join,
+  so the plan holds for unbounded query tables.
+
+``auto`` picks between them by the size of the query table. Both cut by
+(distance, id) on per-pair distances (grid.exact_topk), the oracles'
+``ORDER BY d, id``.
 
 Payload columns ride along: the merged (query_id, id, distance) result
 is tiny, so it re-joins the corpus payload with a broadcast hash join.
@@ -36,13 +37,13 @@ from typing import Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from vicinity_spark.datatypes import Metric
 from vicinity_spark.functions.metrics import clip_distance, distance_expr
-from vicinity_spark.operators.grid import det_topk_idx, rescore_pairs
+from vicinity_spark.operators.grid import exact_topk
 
 
 def _np_distances(metric: Metric, Q: np.ndarray, X: np.ndarray) -> np.ndarray:
@@ -234,32 +235,15 @@ def _partial_topk(
                 continue
             X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            # sort the batch by id, then STABLE-sort distances: the
-            # per-partition cut then breaks exact-distance ties
-            # (duplicate vectors) by id, so the emitted pool — and
-            # therefore the final window result — is deterministic
-            # and matches the oracle's ORDER BY d, id at any layout
+            # sort the batch by id: exact_topk breaks distance ties by
+            # column index, so the per-partition cut is a (distance, id)
+            # cut and the emitted pool is the same at any layout
             order = np.argsort(ids, kind="stable")
             ids, X = ids[order], X[order]
-            D = _np_distances(metric, Q, X)
-            kk = min(k, D.shape[1])
-            idx = det_topk_idx(D, kk)
-            out_qid = np.repeat(qids, kk)
+            idx, d = exact_topk(metric, Q, X, k)
+            out_qid = np.repeat(qids, idx.shape[1])
             out_id = ids[idx.ravel()]
-            # layout-independent emitted distances (r14): re-score the
-            # ≤ q×kk winners with the per-pair kernel — BLAS matrix
-            # kernels can differ by batch SHAPE, so the same pair can
-            # score an ulp apart in different partitions and the
-            # global merge window then breaks exact-duplicate ties by
-            # the wrong ids (see grid._merge_parts rescore note; the
-            # live failure this fixes is tests/test_knn.py::
-            # test_topk_deterministic_under_duplicate_vectors_and_
-            # layouts on a host whose BLAS picks shape-dependent
-            # micro-kernels). Per-batch selection is unaffected.
-            # r15 (ADVICE): chunked via rescore_pairs so the repeated
-            # query / gathered corpus temporaries are byte-bounded
-            # instead of two full q·kk × dim materializations.
-            out_d = rescore_pairs(metric, Q, X, idx).ravel()
+            out_d = d.ravel()
             yield pd.DataFrame(
                 {"query_id": out_qid, "id": out_id, "distance": out_d}
             )
@@ -305,13 +289,19 @@ def knn_join(
     query_vector_col: str = "qvec",
     payload_cols: Optional[Sequence[str]] = None,
     algorithm: str = "auto",
-    dim: Optional[int] = None,
 ) -> DataFrame:
     """Top-k nearest neighbors of every query row over the corpus.
 
     Returns (query_id, id, distance, rank[, payload…]) with rank 1..k by
     ascending distance (ties broken by id — the reference's argsort is
-    positional-stable, basic.py:200-204).
+    positional-stable, basic.py:200-204). Distances are the per-pair
+    kernel's values, so ties between distinct vectors at the same
+    distance also resolve by id, at any partition layout.
+
+    ``algorithm`` is ``"auto"`` (default), ``"partial"`` or ``"grid"``
+    (see the module docstring); anything else raises ValueError.
+    ``"auto"`` takes ``partial`` for a query table of at most
+    AUTO_GRID_QUERY_ROWS rows and ``grid`` otherwise.
 
     ``algorithm="auto"`` routing note: deciding partial-vs-grid may run
     an EAGER bounded probe on the query side at plan-construction time —
@@ -334,34 +324,6 @@ def knn_join(
             if _queries_are_bounded(queries, AUTO_GRID_QUERY_ROWS)
             else "grid"
         )
-
-    if algorithm == "window":
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vector_col).alias("__qvec"),
-        )
-        pairs = corpus.crossJoin(F.broadcast(q))
-        # rank by the RAW distance, clip only the output — the
-        # reference argsorts raw distances and clips the returned
-        # values (basic.py:202, vicinity.py:135); clipped ranking would
-        # collapse every dot>1 inner-product hit into a tie at 0
-        dist = distance_expr(metric, "__qvec", vector_col, dim)
-        # project the vectors away BEFORE the window: the rank shuffle
-        # then moves (query_id, id, distance[, payload]) rows, not the
-        # full arrays — at dim=1024 that is a ~100× shuffle-byte cut
-        scored = pairs.select(
-            "query_id",
-            F.col(id_col).alias("id"),
-            dist.alias("distance"),
-            *(payload_cols or []),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-        ranked = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .withColumn("distance", clip_distance(F.col("distance")))
-        )
-        return ranked.select("query_id", "id", "distance", "rank", *(payload_cols or []))
 
     if algorithm == "partial":
         bq = collect_query_matrix(queries, query_id_col, query_vector_col)
@@ -478,8 +440,8 @@ def threshold_join(
     """
     metric = Metric.from_string(metric)
     if algorithm == "auto":
-        # mirror knn_join's routing (operators/knn.py:306-315): a query
-        # table past the broadcast ceiling must never be force-broadcast
+        # mirror knn_join's routing: a query table past the broadcast
+        # ceiling must never be force-broadcast
         algorithm = (
             "expr"
             if _queries_are_bounded(queries, AUTO_GRID_QUERY_ROWS)

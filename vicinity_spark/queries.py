@@ -195,8 +195,6 @@ def _make_knn(metric: str, k: int = 10):
             _emb_queries(spark, sf_dir),
             k=k,
             metric=metric,
-            algorithm="window",
-            dim=DIM,
         )
         return res.select(
             "query_id",
@@ -238,7 +236,7 @@ def knn_hamming_signbits(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = lambda c: F.transform(c, lambda x: F.when(x.cast("double") > 0.0, 1.0).otherwise(0.0))
     corpus = _emb_corpus(spark, sf_dir).withColumn("vector", bits(F.col("vector")))
     queries = _emb_queries(spark, sf_dir).withColumn("qvec", bits(F.col("qvec")))
-    res = knn_join(corpus, queries, k=10, metric="hamming", algorithm="window", dim=DIM)
+    res = knn_join(corpus, queries, k=10, metric="hamming")
     return res.select(
         "query_id",
         "id",
@@ -257,11 +255,9 @@ def knn_hamming_signbits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_all_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact k-NN across ALL SEVEN reference metrics (S4-S10:
     cosine/euclidean/manhattan/inner-product/l2sq/tanimoto + the
-    sign-bit hamming variant) as one labeled union — each branch is the
-    same oracle-checked window plan the former per-metric entries ran
-    (consolidated r4 so the whole registry fits the driver's 50-entry
-    gate window; per-metric rows remain individually hash-verified
-    inside the union via the `metric` label)."""
+    sign-bit hamming variant) as one labeled union — each branch runs
+    `knn_join`'s auto-routed production plan, and the `metric` label
+    keeps every per-metric row set individually hash-verified."""
     parts = [
         _make_knn(m)(spark, sf_dir).select(F.lit(m).alias("metric"), "*")
         for m in _KNN_METRICS
@@ -314,8 +310,7 @@ _THRESHOLDS = [("cosine", 0.72), ("euclidean", 1.2)]
 )
 def threshold_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius search (F4, `distance <= t`, unsorted) for the
-    cosine+euclidean branches as one labeled union (consolidated r4
-    from threshold_{cosine,euclidean} for the 50-entry gate window)."""
+    cosine+euclidean branches as one labeled union."""
     parts = [
         _make_threshold(m, t)(spark, sf_dir).select(F.lit(m).alias("metric"), "*")
         for m, t in _THRESHOLDS
@@ -855,7 +850,7 @@ def _recall_exact_topk(
 ) -> DataFrame:
     return knn_join(
         corpus.select("id", "vector"), queries, k=_RECALL_K,
-        metric=metric, algorithm="window", dim=DIM,
+        metric=metric,
     ).select("query_id", "id")
 
 
@@ -1318,7 +1313,7 @@ def knn_filtered_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _emb_corpus(spark, sf_dir).where(F.col("label") % 2 == 0)
     res = knn_join(
         corpus, _emb_queries(spark, sf_dir), k=10, metric="cosine",
-        algorithm="window", dim=DIM, payload_cols=["label"],
+        payload_cols=["label"],
     )
     return res.select(
         "query_id", "id", F.col("label").cast("long").alias("label"),
@@ -2828,10 +2823,7 @@ def multimodal_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = feats.where(F.col("media_id") < _MM_NQ).select(
         F.col("media_id").alias("query_id"), F.col("feature").alias("qvec")
     )
-    res = knn_join(
-        corpus, queries, k=_MM_K, metric="cosine", algorithm="window",
-        dim=_MM_GRID * _MM_GRID,
-    )
+    res = knn_join(corpus, queries, k=_MM_K, metric="cosine")
     meta = decode_meta(media).select(
         F.col("media_id").alias("id"), "width", "height", "n_bytes"
     )
@@ -2859,10 +2851,7 @@ def multimodal_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     aqueries = afeats.where(F.col("media_id") < _MA_NQ).select(
         F.col("media_id").alias("query_id"), F.col("feature").alias("qvec")
     )
-    ares = knn_join(
-        acorpus.select("id", "vector"), aqueries, k=_MM_K, metric="cosine",
-        algorithm="window", dim=16,
-    )
+    ares = knn_join(acorpus.select("id", "vector"), aqueries, k=_MM_K, metric="cosine")
     audio = ares.join(acorpus.select("id", "n_bytes"), "id").select(
         F.lit("audio_wav").alias("branch"),
         "query_id",
@@ -2887,10 +2876,7 @@ def multimodal_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vqueries = vfeats.where(F.col("media_id") < _MV_NQ).select(
         F.col("media_id").alias("query_id"), F.col("feature").alias("qvec")
     )
-    vres = knn_join(
-        vcorpus.select("id", "vector"), vqueries, k=_MM_K, metric="cosine",
-        algorithm="window", dim=_MM_GRID * _MM_GRID,
-    )
+    vres = knn_join(vcorpus.select("id", "vector"), vqueries, k=_MM_K, metric="cosine")
     video = vres.join(vcorpus.select("id", "n_bytes"), "id").select(
         F.lit("video_avi").alias("branch"),
         "query_id",
@@ -2913,10 +2899,7 @@ def multimodal_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pqueries = pfeats.where(F.col("media_id") < _MM_NQ).select(
         F.col("media_id").alias("query_id"), F.col("feature").alias("qvec")
     )
-    pres = knn_join(
-        pcorpus, pqueries, k=_MM_K, metric="cosine", algorithm="window",
-        dim=_MM_GRID * _MM_GRID,
-    )
+    pres = knn_join(pcorpus, pqueries, k=_MM_K, metric="cosine")
     pmeta = decode_meta(pmedia).select(F.col("media_id").alias("id"), "width", "height")
     png = pres.join(pmeta, "id").select(
         F.lit("image_png").alias("branch"),
@@ -2941,10 +2924,7 @@ def multimodal_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     jqueries = jfeats.where(F.col("media_id") < _MM_NQ).select(
         F.col("media_id").alias("query_id"), F.col("feature").alias("qvec")
     )
-    jres = knn_join(
-        jcorpus, jqueries, k=_MM_K, metric="cosine", algorithm="window",
-        dim=_MM_GRID * _MM_GRID,
-    )
+    jres = knn_join(jcorpus, jqueries, k=_MM_K, metric="cosine")
     jmeta = decode_meta(jmedia).select(F.col("media_id").alias("id"), "width", "height")
     jpeg = jres.join(jmeta, "id").select(
         F.lit("image_jpeg").alias("branch"),
@@ -3791,11 +3771,9 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
 
 # ----------------------------------------------------------------------
 # ENTRY CONSOLIDATION — same-schema entries merge into one labeled
-# union so the registry fits the driver's 50-entry gate window without
-# rotation (r4; see GATE-WINDOW ORDERING below). Each branch stays an
-# independently hash-verified row set inside the union (the label
-# column keeps branches disjoint), so no verification is lost — one
-# CORRECTNESS row now covers what used to be several.
+# union. Each branch stays an independently hash-verified row set
+# inside the union (the label column keeps branches disjoint), so one
+# oracle row covers what used to be several.
 
 
 def _merge_entries(new_name: str, label_col: str, members, doc: str) -> None:
@@ -4722,16 +4700,12 @@ def docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_queries(spark, sf_dir),
         k=20,
         metric="cosine",
-        algorithm="window",
-        dim=DIM,
     ).select("query_id", F.col("id").alias("doc_id"), "rank")
     ip = knn_join(
         _emb_corpus(spark, sf_dir),
         _emb_queries(spark, sf_dir),
         k=20,
         metric="inner_product",
-        algorithm="window",
-        dim=DIM,
     ).select("query_id", F.col("id").alias("doc_id"), "rank")
     return rrf_fuse(lex, dense, ip, k=10)
 
@@ -4852,8 +4826,6 @@ def docs_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_queries(spark, sf_dir),
         k=20,
         metric="cosine",
-        algorithm="window",
-        dim=DIM,
     )
     hn = hard_negatives(
         dense, _t(spark, sf_dir, "documents"), k=10, max_jaccard=0.5
@@ -5304,187 +5276,3 @@ def emb_cluster_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CURATE_N,
     )
     return out.select(F.col("id").alias("vec_id"), "cluster_id", "label")
-
-
-# ----------------------------------------------------------------------
-# GATE-WINDOW ORDERING — read before registering a new query.
-#
-# The driver's correctness gate hash-checks only the FIRST 50 entries of
-# QUERIES *in registration (dict-insertion) order*; anything past
-# position 50 is silently unchecked that round.  Round 3 learned this
-# the hard way: 11 new registrations evicted 11 previously-green entries
-# (including skew_salted_join, never verified in 3 rounds).
-#
-# The registry is therefore re-ranked here, after all registrations:
-#   1. _CHECK_FIRST — entries that NEED a green row this round (never
-#      verified, lost their green row, or new this round) go up front.
-#   2. everything else keeps its natural registration order.
-#   3. _ROTATE_OUT — entries green three rounds running (the stable
-#      7-metric knn family, q1/q3, thresholds) take the unchecked tail
-#      for one round.
-#
-# When you ADD a query: append its name to _CHECK_FIRST and, if the
-# window is full, move another multi-round-green name into _ROTATE_OUT.
-# Then run `python scripts/verified_ledger.py` — it regenerates
-# VERIFIED.md and exits non-zero if a never-green entry sits outside
-# the 50-entry window.
-
-_CHECK_FIRST = [
-    # --- r15 rotation (standing invariant, r14 VERDICT item 7) -------
-    # Window design (47 + 3 = 50) over the 97-query registry: (a) ALL
-    # 47 rows not green in r14 — exactly the r14 tail — come back,
-    # keeping the at-most-one-round-unchecked promise (r14 ∪ r15
-    # covers every registered query; the invariant has held since
-    # r9∪r10 and was re-derived by the r14 judge). (b) the remaining
-    # 3 slots go to r14-green rows whose code r15 TOUCHED with a
-    # program no returning-tail row certifies:
-    #   knn_all_metrics — knn.py's exact partial pools gained the
-    #     chunked per-pair pre-merge rescore (commit 4940e9c); the
-    #     7-metric row is the strongest single certifier of that
-    #     kernel, and no tail row runs the exact-knn pool path;
-    #   emb_semdedup_chunked — the packed-binary fold (commit 125d3dc)
-    #     through _cluster_block_pairs_kernel, the one kernel no other
-    #     in-window row executes;
-    #   emb_semdedup_incremental — the packed fold through
-    #     _cluster_cross_pairs_kernel plus the new _pack_udf
-    #     (precomputed-cluster inputs), likewise unique.
-    # Six further r15-touched r14-green rows stay in the tail under
-    # the r12 docs_unigram_xent subsumption precedent (the touched
-    # program runs in-window through a sibling executing the SAME
-    # code): dedup_minhash_onepass / dedup_minhash_affine /
-    # docs_clean_pipeline / dedup_simhash_exploded are touched ONLY
-    # through connected_components' single-read edge build, certified
-    # in-window by dedup_connected_components and the six minhash
-    # rows plus dedup_neardup_e2e; semantic_dedup and
-    # emb_cluster_curate run semdedup's default packed path, certified
-    # in-window by emb_semdedup (curate's join-back and the farthest
-    # re-pick are untouched this round; emb_semdedup_farthest's only
-    # delta — cdist emission in _assign_pack_udf — is pinned
-    # bit-equal by tests/test_cluster.py::
-    # test_packed_assignment_matches_plain_and_roundtrips).
-    # knn_filtered_label / multimodal_knn / ann_recall_summary share
-    # knn_all_metrics' pool kernel (their filters/decodes untouched);
-    # ann_graph_knn / ann_ivfsq_knn share grid.py's chunk-rescore
-    # with the six in-window ann_* rows. docs_dsir_hashed/select's
-    # r15 touch is an error-path fallback only (NULL-logp → join
-    # plan), no plan change for valid inputs.
-    # (a) not green in r14 (the 47-row r14 tail):
-    "docs_hard_negatives",
-    "docs_unigram_xent",
-    "events_asof_join",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "threshold_radius",
-    "docs_pack_sequences",
-    "docs_mix_sources",
-    "docs_training_stream",
-    "docs_pii_redact",
-    "docs_source_cap",
-    "docs_token_budget",
-    "docs_weighted_sample",
-    "docs_stratified_sample",
-    "docs_quality_tiers",
-    "docs_splits",
-    "docs_line_dedup",
-    "rollup_revenue",
-    "part_string_functions",
-    "events_json_extract",
-    "orders_by_month",
-    "customers_without_orders",
-    "lineitem_stats",
-    "supplier_stats_by_nation",
-    "ann_ivf_knn",
-    "ann_ivfpq_knn",
-    "ann_ivfpqr_knn",
-    "docs_cluster_sample",
-    "dedup_keep_best",
-    "dedup_connected_components",
-    "dedup_shared_grams",
-    "dedup_minhash_lsh",
-    "dedup_minhash_capped",
-    "dedup_minhash_tokenroll",
-    "dedup_minhash_incremental",
-    "dedup_minhash_snapshot",
-    "dedup_minhash_compacted",
-    "dedup_neardup_e2e",
-    "ann_lsh_knn",
-    "emb_covariance",
-    "emb_projection_arrow",
-    "emb_semdedup",
-    "ann_pq_knn",
-    "ann_sq_knn",
-    "threshold_grid_routing",
-    "neardup_pairs",
-    "docs_bm25_loaded",
-    # (b) r14-green, r15-touched unique programs (3):
-    "knn_all_metrics",
-    "emb_semdedup_chunked",
-    "emb_semdedup_incremental",
-]
-
-# r15 tail: 47 rows, every one green in CORRECTNESS_r14.json, with
-# every r15 touch among them subsumed by an in-window sibling running
-# the identical program (see the _CHECK_FIRST header;
-# scripts/verified_ledger enforces that nothing never-green sits
-# here and VERIFIED.md records each skip rationale).
-_ROTATE_OUT: "list[str]" = [
-    "dedup_exact",
-    "dedup_minhash_onepass",
-    "dedup_minhash_affine",
-    "emb_random_projection",
-    "vector_norms",
-    "text_token_stats",
-    "text_quality",
-    "text_fingerprint",
-    "vector_stats_by_label",
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "regional_revenue",
-    "events_hourly",
-    "events_sessionize",
-    "top_parts_per_brand",
-    "docs_stats_by_lang",
-    "text_subword_tokens",
-    "text_langid",
-    "dedup_simhash",
-    "vocab_top_tokens",
-    "docs_clean_pipeline",
-    "text_pmi_bigrams",
-    "lineitem_quantiles",
-    "orders_running_revenue",
-    "dedup_simhash_exploded",
-    "dedup_simhash_pairs",
-    "dedup_jaccard_variants",
-    "docs_curation_pipeline",
-    "docs_decontaminate",
-    "multimodal_knn",
-    "text_repetition",
-    "ann_graph_knn",
-    "knn_filtered_label",
-    "docs_strip_shared_spans",
-    "docs_dsir_select",
-    "docs_dsir_hashed",
-    "semantic_dedup",
-    "docs_bm25_append",
-    "docs_bm25_topk",
-    "docs_hybrid_rrf",
-    "docs_bigram_xent",
-    "ann_recall_summary",
-    "emb_semdedup_farthest",
-    "emb_cluster_stats",
-    "text_quality_classifier",
-    "ann_ivfsq_knn",
-    "emb_cluster_curate",
-]
-
-def _reorder_registry() -> None:
-    global QUERIES, ORACLES
-    front = [n for n in _CHECK_FIRST if n in QUERIES]
-    back = [n for n in _ROTATE_OUT if n in QUERIES and n not in front]
-    mid = [n for n in QUERIES if n not in front and n not in back]
-    order = front + mid + back
-    QUERIES = {n: QUERIES[n] for n in order}
-    ORACLES = {n: ORACLES[n] for n in order if n in ORACLES}
-
-
-_reorder_registry()

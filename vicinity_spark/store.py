@@ -243,7 +243,7 @@ class VectorStore:
         rows = self.query_df(qdf, k=k, where=where).orderBy("query_id", "rank").collect()
         out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
         for r in rows:
-            out[r["query_id"]].append((json.loads(r["item_json"]), float(r["distance"])))
+            out[r["query_id"]].append((self._item(r), float(r["distance"])))
         return out
 
     def query_stream(
@@ -355,8 +355,17 @@ class VectorStore:
         rows = self.threshold_df(qdf, threshold=threshold).collect()
         out: "list[list[tuple[Any, float]]]" = [[] for _ in range(n)]
         for r in rows:
-            out[r["query_id"]].append((json.loads(r["item_json"]), float(r["distance"])))
+            out[r["query_id"]].append((self._item(r), float(r["distance"])))
         return out
+
+    def _item(self, row) -> Any:
+        """The item a result row stands for: its stored item when it has
+        one, else (a row of a ``from_dataframe`` source) a dict of its
+        payload columns."""
+        values = row.asDict()
+        if values.get("item_json") is not None:
+            return json.loads(values["item_json"])
+        return {c: values[c] for c in self.payload_cols if c != "item_json"}
 
     # ---- point lookup (F5) -----------------------------------------
     def get_vector_by_index(self, index) -> np.ndarray:
@@ -434,20 +443,23 @@ class VectorStore:
         tokens raise (vicinity.py:255-283)."""
         by_token = {_dump_item(t): t for t in items}
         tokens = list(by_token)
-        present = {
-            r[0]
-            for r in self.df.where(F.col("item_json").isin(tokens))
-            .select("item_json")
-            .distinct()
-            .collect()
-        }
+        # rows of a from_dataframe source have no item (NULL item_json,
+        # or no column before the first insert): never a match, and
+        # never dropped by the NOT below
+        item = (
+            F.col("item_json")
+            if "item_json" in self.df.columns
+            else F.lit(None).cast("string")
+        )
+        hit = F.coalesce(item.isin(tokens), F.lit(False))
+        present = {r[0] for r in self.df.where(hit).select(item).distinct().collect()}
         missing = [by_token[t] for t in tokens if t not in present]
         if missing:
             raise ValueError(f"Tokens {missing} were not in the store.")
-        removed = self.df.where(F.col("item_json").isin(tokens)).count()
+        removed = self.df.where(hit).count()
         # the filtered frame (which already folds in any insert delta)
         # becomes the new base; the delta restarts empty
-        self._set_df(self.df.where(~F.col("item_json").isin(tokens)))
+        self._set_df(self.df.where(~hit))
         if self._count is not None:
             self._count -= removed
 
